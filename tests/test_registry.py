@@ -6,7 +6,12 @@ another's function (stacked decorators both register the same callable)
 driver's correctness gate.  Pin the naming convention instead.
 """
 
+from userbehavioranalysis_spark import jobs
 from userbehavioranalysis_spark.registry import ORACLES, QUERIES
+from userbehavioranalysis_spark.registry.reference import (
+    FIXTURE_KEYS,
+    missing_fixtures,
+)
 
 
 def test_every_query_bound_to_its_own_function():
@@ -82,6 +87,15 @@ def test_driver_window_r8_covers_every_query():
     assert R8_WINDOW_CANDIDATES <= set(QUERIES)
 
 
+def test_fixture_declaration_covers_the_ref_queries():
+    """Every ref_* query reads a reference fixture file, and harnesses
+    learn which one only from FIXTURE_KEYS — an undeclared ref_* query
+    would abort them with PATH_NOT_FOUND where the file is absent."""
+    assert set(FIXTURE_KEYS) == {n for n in QUERIES if n.startswith("ref_")}
+    unknown = {k for keys in FIXTURE_KEYS.values() for k in keys} - set(jobs.FIXTURES)
+    assert not unknown, f"FIXTURE_KEYS names unknown fixtures: {sorted(unknown)}"
+
+
 def test_driver_window_outputs_are_scalar(spark):
     """The driver's pandas canonicalizer sorts result columns and
     cannot hash ARRAY/MAP/STRUCT cells (CORRECTNESS_r04's one red row,
@@ -89,13 +103,15 @@ def test_driver_window_outputs_are_scalar(spark):
     scalar columns only.  Streaming replays are excluded here (building
     their frame EXECUTES the replay; their outputs are spilled parquet
     already proven scalar by their r3 driver rows) and checked by the
-    rotation sampler instead."""
+    rotation sampler instead.  A ref_* row whose reference fixture file
+    is absent cannot build its frame and is stepped past; every other
+    row is still checked."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     sf = "/root/testdata/sf0.001"
     offenders = {}
     for name in list(QUERIES)[:50]:
-        if name.startswith("streaming_"):
+        if name.startswith("streaming_") or missing_fixtures(name):
             continue
         schema = QUERIES[name](spark, sf).schema
         bad = [

@@ -8,7 +8,11 @@ Usage:
 Covers every BATCH query in the registry at sf0.001 (streaming_*
 replays are excluded: constructing their frame EXECUTES the stream,
 and the returned frame is just a scan of the foreach sink — their
-regression signal is the oracle gate, not the plan).  The baseline is
+regression signal is the oracle gate, not the plan).  A ref_* query
+whose reference fixture file is absent (registry/reference.py
+FIXTURE_KEYS) cannot build its frame: every mode reports it as
+``SKIPPED (missing <path>)``, and --update carries its existing
+baseline entry over unchanged.  The baseline is
 scale-pinned to sf0.001 (see plans/fingerprint.py); bench.py records
 per-round sf0.1 fingerprints in BENCH_DETAIL.json independently.
 
@@ -58,6 +62,18 @@ def compute(names: list[str]) -> dict[str, str]:
     return out
 
 
+def skipped_queries(names: list[str]) -> dict[str, str]:
+    """``{name: "SKIPPED (missing <paths>)"}`` for each query whose
+    reference fixture file is absent."""
+    from userbehavioranalysis_spark.registry.reference import missing_fixtures
+
+    return {
+        n: f"SKIPPED (missing {', '.join(m)})"
+        for n in names
+        if (m := missing_fixtures(n))
+    }
+
+
 def main() -> int:
     args = sys.argv[1:]
     if args[:1] == ["--show"]:
@@ -65,17 +81,32 @@ def main() -> int:
         from userbehavioranalysis_spark.plans.fingerprint import normalized_plan
         from userbehavioranalysis_spark.registry import QUERIES
 
+        skipped = skipped_queries(args[1:])
         spark = get_spark("uba-plan-fingerprints")
         spark.sparkContext.setLogLevel("ERROR")
         for n in args[1:]:
-            spark.catalog.clearCache()  # see compute()
             print(f"===== {n}")
+            if n in skipped:
+                print(skipped[n])
+                continue
+            spark.catalog.clearCache()  # see compute()
             print(normalized_plan(QUERIES[n](spark, SF_DIR)))
         return 0
 
     names = batch_query_names()
-    got = compute(names)
+    skipped = skipped_queries(names)
+    got = compute([n for n in names if n not in skipped])
+    want = {}
+    if os.path.exists(BASELINE):
+        with open(BASELINE) as f:
+            want = json.load(f)["fingerprints"]
     if args[:1] == ["--update"]:
+        for n, status in skipped.items():
+            if n in want:
+                got[n] = want[n]
+                print(f"{n:44s} {status}: baseline entry carried over")
+            else:
+                print(f"{n:44s} {status}: no baseline entry to carry over")
         with open(BASELINE, "w") as f:
             json.dump(
                 {"sf_dir": SF_DIR, "fingerprints": got}, f, indent=1, sort_keys=True
@@ -83,22 +114,26 @@ def main() -> int:
         print(f"wrote {len(got)} fingerprints to {BASELINE}")
         return 0
 
-    with open(BASELINE) as f:
-        want = json.load(f)["fingerprints"]
     bad = []
     for n in names:
-        status = "OK"
-        if n not in want:
+        if n in skipped:
+            status = skipped[n]
+        elif n not in want:
             status = "NEW (not in baseline — run --update)"
             bad.append(n)
         elif want[n] != got[n]:
             status = f"CHANGED {want[n]} -> {got[n]}"
             bad.append(n)
+        else:
+            status = "OK"
         print(f"{n:44s} {status}")
     stale = sorted(set(want) - set(names))
     for n in stale:
         print(f"{n:44s} STALE (in baseline, not registered)")
-    print(f"\n{len(names) - len(bad)}/{len(names)} unchanged")
+    print(
+        f"\n{len(names) - len(bad) - len(skipped)}/{len(names)} unchanged, "
+        f"{len(skipped)} skipped (reference fixture missing)"
+    )
     return 1 if bad or stale else 0
 
 

@@ -20,6 +20,8 @@ get a portable ``event_id`` = 60-bit md5 hash of the full row
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +52,14 @@ FIXTURES = {
     "order_log": f"{REFERENCE_ROOT}/OrderPayDetect/src/main/resources/OrderLog.csv",
     "receipt_log": f"{REFERENCE_ROOT}/OrderPayDetect/src/main/resources/ReceiptLog.csv",
 }
+
+
+def fixture_exists(key: str) -> bool:
+    """Whether the reference fixture file ``FIXTURES[key]`` is on disk.
+
+    The fixtures live in the reference checkout, not in this repo, and
+    cannot be regenerated; callers that read one check this first."""
+    return os.path.isfile(FIXTURES[key])
 
 
 def _with_event_id(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -140,6 +140,7 @@ def incremental_refresh(
     semantics — the registered query uses that form so the oracle is a
     full SQL replay.
     """
+    from userbehavioranalysis_spark.operators.cachepool import release_pooled
     from userbehavioranalysis_spark.operators.dedup import (
         minhash_corpus_index,
         minhash_incremental_matches,
@@ -150,7 +151,13 @@ def incremental_refresh(
         # two plan branches of the probe (band join + score join) — a
         # plain lazy pair would tokenize+minhash the CORPUS twice in
         # one job.  Caller-owned caches (one-shot per refresh; Spark's
-        # LRU reclaims after the composed plan is consumed).
+        # LRU reclaims after the composed plan is consumed).  Release
+        # the default pool FIRST: an earlier operator (e.g.
+        # minhash_incremental_matches without an index) may have pooled
+        # a plan-equal corpus signature, and unpersist() works by plan
+        # equality — released later by the self-LSH step, that stale
+        # frame would uncache this index too.
+        release_pooled()
         sig_c, bk_c = minhash_corpus_index(corpus, max_bucket=max_bucket)
         corpus_index = (sig_c.cache(), bk_c.cache())
     gated = _quality_lang_gate(new_docs, min_score, lang)

@@ -35,6 +35,31 @@ from userbehavioranalysis_spark.sources.readers import (  # noqa: F401
 )
 
 
+# The reference fixture files (``jobs.FIXTURES`` keys) each ref_* query
+# reads.  They are not part of this repo; a query whose file is absent
+# cannot build its frame (PATH_NOT_FOUND), so harnesses step past it.
+FIXTURE_KEYS: dict[str, tuple[str, ...]] = {
+    "ref_login_fail": ("login_log",),
+    "ref_order_timeout": ("order_log",),
+    "ref_tx_match_interval": ("order_log", "receipt_log"),
+    "ref_tx_reconcile": ("order_log", "receipt_log"),
+    "ref_ad_province_counts": ("ad_click",),
+    "ref_ad_blacklist_warnings": ("ad_click",),
+    "ref_network_flow_top5": ("apache_log",),
+    "ref_network_flow_report": ("apache_log",),
+}
+
+
+def missing_fixtures(name: str) -> list[str]:
+    """Paths of the fixture files query ``name`` reads that are absent
+    from disk (empty for a query that reads none)."""
+    return [
+        _jobs.FIXTURES[k]
+        for k in FIXTURE_KEYS.get(name, ())
+        if not _jobs.fixture_exists(k)
+    ]
+
+
 _LOGIN_CSV = (
     "read_csv('" + _jobs.FIXTURES["login_log"] + "', header=false, "
     "columns={'user_id':'BIGINT','ip':'VARCHAR','event_type':'VARCHAR','ts':'BIGINT'})"
